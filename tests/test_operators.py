@@ -260,27 +260,84 @@ def test_ivf_topk_subset_of_brute(spark):
     )
 
 
-def test_assign_clusters_numpy_matches_literal(spark, sf_dir):
+def test_assign_clusters_numpy_matches_literal(spark, sf_dir, monkeypatch):
     """The large-k numpy path must agree with the literal (oracle-
     parity) path on real data — random vectors have no exact distance
     ties, so float summation-order differences cannot flip the argmin
     here."""
-    from themis_tritonsort_spark.operators.kmeans import assign_clusters
+    from themis_tritonsort_spark.operators import kmeans
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     centers = [
         [float(x) for x in r["embedding"]]
         for r in emb.where(F.col("vec_id") < 6).orderBy("vec_id").collect()
     ]
-    lit = {
-        r["vec_id"]: r["cluster"]
-        for r in assign_clusters(emb, "embedding", centers, strategy="literal").collect()
-    }
-    npy = {
-        r["vec_id"]: r["cluster"]
-        for r in assign_clusters(emb, "embedding", centers, strategy="numpy").collect()
-    }
+    lit_df = assign_clusters(emb, "embedding", centers)
+    assert "ArrowEvalPython" not in _physical(lit_df)
+    lit = {r["vec_id"]: r["cluster"] for r in lit_df.collect()}
+    # a zero literal budget routes the same centers through numpy
+    monkeypatch.setattr(kmeans, "_LITERAL_BUDGET", 0)
+    npy_df = assign_clusters(emb, "embedding", centers)
+    assert "ArrowEvalPython" in _physical(npy_df)
+    npy = {r["vec_id"]: r["cluster"] for r in npy_df.collect()}
     assert lit == npy and len(lit) > 0
+
+
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _non_checkpoint_cached(spark) -> set[int]:
+    """Ids of persisted RDDs that are NOT localCheckpoint blocks (those
+    are lineage-owned and freed with the DataFrame)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        int(i) for i, r in rdds.items() if not r.rdd().isLocallyCheckpointed()
+    }
+
+
+def test_pagerank_and_bpe_release_their_caches(spark):
+    from themis_tritonsort_spark.operators.bpe import bpe_train
+    from themis_tritonsort_spark.operators.pagerank import pagerank
+
+    before = _non_checkpoint_cached(spark)
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 3), (4, 1)], "src long, dst long"
+    )
+    assert len(pagerank(edges, iterations=2).collect()) == 4
+    docs = spark.createDataFrame(
+        [(1, "low lower lowest"), (2, "newer newest low")], "id long, text string"
+    )
+    _, vocab = bpe_train(docs, merges=2)
+    assert vocab.count() > 0
+    assert _non_checkpoint_cached(spark) <= before, "leaked cache"
+
+
+@pytest.mark.parametrize("vec_col", ["emb`ed", "emb.ed", "c", "I"])
+def test_vector_ops_take_column_names_literally(spark, vec_col):
+    """assign_clusters, lloyd and kcenter_select treat ``vec_col`` as a
+    top-level column name: a backtick or a dot in it is part of the
+    name, a name equal to a SQL lambda variable is not captured by it,
+    and the results match the same data under a plain name."""
+    from themis_tritonsort_spark.operators.similarity import kcenter_select
+
+    pts = [(i, [float(i % 3 * 10 + i % 2), float(i % 5)]) for i in range(30)]
+    plain = spark.createDataFrame(pts, "id long, v array<double>")
+    odd = plain.withColumnRenamed("v", vec_col)
+    init = [[0.0, 0.0], [10.0, 0.0], [20.0, 0.0]]
+
+    def ids(df):
+        return sorted((r["id"], r["cluster"]) for r in df.collect())
+
+    assert ids(assign_clusters(odd, vec_col, init)) == ids(
+        assign_clusters(plain, "v", init)
+    )
+    a_odd, c_odd = lloyd(odd, vec_col, k=3, iterations=2, initial_centers=init)
+    a_plain, c_plain = lloyd(plain, "v", k=3, iterations=2, initial_centers=init)
+    assert c_odd == c_plain and ids(a_odd) == ids(a_plain)
+    assert kcenter_select(odd, "id", vec_col, k=4).collect() == kcenter_select(
+        plain, "id", "v", k=4
+    ).collect()
 
 
 def test_build_ivf_recall_floor(spark, sf_dir):

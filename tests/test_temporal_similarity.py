@@ -125,9 +125,8 @@ def test_lsh_neardup_subset_of_exact(spark, sf_dir):
     assert len(exact) > 0
     assert len(approx) >= len(exact) // 2  # sane recall at 8 bands of 2 bits
     for pair, ppm in approx.items():
-        # numpy (pairwise) vs Catalyst-fold (sequential) summation may
-        # differ in the last ulp -> at most 1 ppm after rounding
-        assert abs(ppm - exact[pair]) <= 1
+        # both verify with the same integer icos_ppm: bit-identical
+        assert ppm == exact[pair]
 
 
 def test_connected_components_known_graph(spark):

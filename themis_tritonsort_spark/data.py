@@ -10,6 +10,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .functions.vectors import sql_ident
+
 TABLES = (
     "region",
     "nation",
@@ -92,7 +94,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in _NANOS_TS_COLS.get(name, ()):
         dt = df.schema[c].dataType
         if isinstance(dt, LongType):
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+            df = df.withColumn(
+                c, F.timestamp_micros(F.expr(f"{sql_ident(c)} div 1000"))
+            )
         elif isinstance(dt, TimestampNTZType):
             # NTZ -> LTZ reinterprets wall-clock in the SESSION timezone;
             # the stored values are UTC instants, so this cast is only
@@ -108,13 +112,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() plans can
-    reference them by name (mirrors the DuckDB oracle's view setup)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

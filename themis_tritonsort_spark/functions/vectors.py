@@ -12,12 +12,19 @@ reorder a rank or move a threshold (q141's round-5 driver red).  Any
 score that feeds a rank, threshold, or emitted integer therefore goes
 through the INTEGER discipline below: ``micro_quantize`` /
 ``sq8_quantize`` map-side, exact ``idot``, and one final
-deterministic IEEE division (``icos_ppm``).  The float ``l2_sq`` fold
-remains for scores both engines re-derive with the identical fold
-expression (k-means/IVF cell assignment); the float ``dot`` /
-``cosine`` folds were REMOVED in round 7 once their last rank-feeding
-call site (pq_rerank_topk) converted — reintroducing a float cosine
-on any emitted rank or threshold recreates the q141 r05 driver red.
+deterministic IEEE division (``icos_ppm``).  The float squared-L2
+fold (``l2_sq_sql``) remains for scores both engines re-derive with
+the identical fold expression (k-means/IVF cell assignment, k-center
+distances); the float ``dot`` / ``cosine`` folds were REMOVED in round
+7 once their last rank-feeding call site (pq_rerank_topk) converted —
+reintroducing a float cosine on any emitted rank or threshold
+recreates the q141 r05 driver red.
+
+The SQL builder at the bottom (``sql_ident`` / ``sql_double`` /
+``sql_array`` / ``centers_sql`` / ``l2_sq_sql``) is the ONE way this package writes a
+fold, a literal, or a column name into an ``F.expr`` string.  A
+column name passed to it is a TOP-LEVEL column taken literally: dots
+and backticks are part of the name, never a struct-field path.
 """
 
 from __future__ import annotations
@@ -29,17 +36,6 @@ from pyspark.sql import functions as F
 def as_double(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("array<double>")
-
-
-def _fold_sum(arr: Column) -> Column:
-    # Sequential left fold => deterministic summation order.
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def l2_sq(a: Column, b: Column) -> Column:
-    return _fold_sum(
-        F.zip_with(as_double(a), as_double(b), lambda x, y: (x - y) * (x - y))
-    )
 
 
 def maxabs(a: Column) -> Column:
@@ -149,3 +145,50 @@ def icos_ppm(qa: Column, na: Column, qb: Column, nb: Column) -> Column:
         / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double")))
         + F.lit(0.5)
     ).cast("long")
+
+
+# ------------------------------------------------------------ SQL builder
+# Built as ONE F.expr string: the per-element ``F.lit``
+# form costs one py4j round trip PER NUMBER — ~0.6 s per 512-literal
+# center set per loop iteration, all driver-side client overhead — while
+# the parsed expression tree is identical.
+
+
+def sql_ident(name: str) -> str:
+    """Backtick-quoted identifier for a TOP-LEVEL column, taken
+    literally (a dot is part of the name, not a field path); embedded
+    backticks are doubled, which is SQL's escape for them."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_double(x: float) -> str:
+    """Exact double literal: Python's shortest round-trip repr through
+    CAST(string AS DOUBLE), which the JVM parses correctly rounded —
+    the folded Literal is bit-identical to ``F.lit(float(x))``."""
+    v = float(x)
+    if v != v or v in (float("inf"), float("-inf")):
+        raise ValueError(f"non-finite SQL double literal: {x!r}")
+    return f"CAST('{v!r}' AS DOUBLE)"
+
+
+def sql_array(xs: list[float]) -> str:
+    """``array(...)`` SQL literal of exact doubles."""
+    return "array(" + ",".join(sql_double(x) for x in xs) + ")"
+
+
+def centers_sql(centers: list[list[float]]) -> str:
+    """``array(array(...), ...)`` SQL literal for a center/codeword set
+    — ONE py4j string instead of k*dim client-side ``F.lit`` calls."""
+    return "array(" + ",".join(sql_array(c) for c in centers) + ")"
+
+
+def l2_sq_sql(name: str, center: str) -> str:
+    """Squared L2 between column ``name`` and the SQL array expression
+    ``center`` (a literal or a lambda variable) as a sequential left
+    fold — a fixed summation order, so every replay of this expression
+    (either engine) yields the same double."""
+    return (
+        f"aggregate(zip_with(CAST({sql_ident(name)} AS ARRAY<DOUBLE>), "
+        f"{center}, (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), "
+        f"(acc, x) -> acc + x)"
+    )

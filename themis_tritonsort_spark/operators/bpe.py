@@ -106,30 +106,38 @@ def bpe_train(
     )
     rules: list[tuple[str, str]] = []
     cur = words
-    for _ in range(merges):
-        pairs = (
-            cur.select(
-                F.col("cnt"),
-                F.explode(
-                    F.arrays_zip(
-                        F.slice(F.col("syms"), 1, F.size("syms") - 1).alias("a"),
-                        F.slice(F.col("syms"), 2, F.size("syms") - 1).alias("b"),
-                    )
-                ).alias("p"),
+    try:
+        for _ in range(merges):
+            pairs = (
+                cur.select(
+                    F.col("cnt"),
+                    F.explode(
+                        F.arrays_zip(
+                            F.slice(F.col("syms"), 1, F.size("syms") - 1).alias("a"),
+                            F.slice(F.col("syms"), 2, F.size("syms") - 1).alias("b"),
+                        )
+                    ).alias("p"),
+                )
+                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+                .agg(F.sum("cnt").alias("c"))
             )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("cnt").alias("c"))
-        )
-        best = pairs.orderBy(
-            F.col("c").desc(), F.col("a").asc(), F.col("b").asc()
-        ).limit(1).collect()
-        if not best:
-            break
-        left, right = best[0]["a"], best[0]["b"]
-        rules.append((left, right))
-        cur = cur.withColumn(
-            "syms", _merge_fold(F.col("syms"), left, right)
-        ).localCheckpoint(eager=False)
+            best = pairs.orderBy(
+                F.col("c").desc(), F.col("a").asc(), F.col("b").asc()
+            ).limit(1).collect()
+            if not best:
+                break
+            left, right = best[0]["a"], best[0]["b"]
+            rules.append((left, right))
+            cur = cur.withColumn(
+                "syms", _merge_fold(F.col("syms"), left, right)
+            ).localCheckpoint(eager=False)
+        # Eager final checkpoint of the merged word table, then release
+        # the persisted one (label_propagation's discipline): nothing
+        # stays cached in the session, and the caller's vocab action
+        # would have computed this table anyway.
+        cur = cur.localCheckpoint(eager=True)
+    finally:
+        words.unpersist()
     vocab = (
         cur.select("cnt", F.explode("syms").alias("symbol"))
         .groupBy("symbol")

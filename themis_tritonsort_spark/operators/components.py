@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import scoped_conf
+
 
 # Cached-row budget for one (long, long) edge row: 16 payload bytes
 # plus tungsten/cache overhead.  Only feeds a partition-count estimate;
@@ -371,11 +373,11 @@ def connected_components_star(
     # SLOWER under size-first coalescing (their cached 32-partition
     # edge side then joins a 1-partition label side), so this is not a
     # session-wide default.
-    spark = edges.sparkSession
-    _PF = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    pf_before = spark.conf.get(_PF, "true")
-    spark.conf.set(_PF, "false")
-    try:
+    with scoped_conf(
+        edges.sparkSession,
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+        "false",
+    ):
         for _ in range(max_iterations):
             e_new = star(star(e, large=True), large=False)
             fp = fingerprint(e_new)
@@ -397,8 +399,6 @@ def connected_components_star(
                 "O(log^2 n) — check for id overflow or raise "
                 "max_iterations"
             )
-    finally:
-        spark.conf.set(_PF, pf_before)
 
     # fixed point: (root, leaf) stars.  Every vertex resolves through
     # the leaf->root map; roots (and any vertex whose edges contracted

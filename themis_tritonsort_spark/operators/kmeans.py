@@ -21,50 +21,31 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import as_double
+from ..functions.vectors import (
+    as_double,
+    centers_sql,
+    l2_sq_sql,
+    sql_ident,
+)
 
 # Above this many center*dim literals the expression-tree form costs
 # more in analysis/codegen than the Arrow round-trip of the numpy form.
 _LITERAL_BUDGET = 4096
 
 
-def sql_double(x: float) -> str:
-    """Exact double literal for a SQL expression string: Python's
-    shortest round-trip repr through CAST(string AS DOUBLE), which the
-    JVM parses correctly rounded — the folded Literal is bit-identical
-    to ``F.lit(float(x))``.  Used by the single-``F.expr`` construction
-    paths below (guide §4: the per-element ``F.lit`` form costs one
-    py4j round trip PER NUMBER — ~0.6 s per 512-literal center set per
-    loop iteration, all driver-side client overhead)."""
-    v = float(x)
-    if v != v or v in (float("inf"), float("-inf")):
-        raise ValueError(f"non-finite center component: {x!r}")
-    return f"CAST('{v!r}' AS DOUBLE)"
-
-
-def centers_sql(centers: list[list[float]]) -> str:
-    """``array(array(...), ...)`` SQL literal for a center/codeword set
-    — ONE py4j string instead of k*dim client-side ``F.lit`` calls."""
-    return (
-        "array("
-        + ",".join(
-            "array(" + ",".join(sql_double(x) for x in c) + ")"
-            for c in centers
-        )
-        + ")"
-    )
-
-
 def _assign_sql(vec_col: str, centers: list[list[float]]) -> str:
-    """The literal-path assignment as ONE SQL expression string —
-    exactly the expression tree the per-``F.lit`` form builds (same
-    zip_with/aggregate fold, same struct tie order), constructed with
-    a single py4j call and parsed/folded in the JVM in milliseconds."""
+    """The literal-path assignment as ONE SQL expression string: ONE
+    transform lambda over a nested centers literal, so the distance
+    fold is compiled once and looped over centers at eval time instead
+    of k unrolled copies in the expression tree.  array_min over
+    (dist, cid) structs orders lexicographically: the smallest distance
+    wins, the lowest cid on ties.  A lambda variable shadows a column of
+    the same (case-insensitive) name, so one named like ``vec_col`` is
+    renamed."""
+    c, i = (v if v != vec_col.lower() else f"_{v}" for v in ("c", "i"))
     return (
-        f"array_min(transform({centers_sql(centers)}, (c, i) -> "
-        f"struct(aggregate(zip_with(CAST(`{vec_col}` AS ARRAY<DOUBLE>), c, "
-        f"(x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), "
-        f"(acc, x) -> acc + x) AS d, i AS cid))).cid"
+        f"array_min(transform({centers_sql(centers)}, ({c}, {i}) -> "
+        f"struct({l2_sq_sql(vec_col, c)} AS d, {i} AS cid))).cid"
     )
 
 
@@ -88,7 +69,9 @@ def _assign_numpy(
         scores = c_sq - 2.0 * (m @ c_t)  # batch x k
         return pd.Series(scores.argmin(axis=1).astype("int64"))
 
-    return df.withColumn(out_col, nearest(as_double(F.col(vec_col))))
+    return df.withColumn(
+        out_col, nearest(as_double(F.col(sql_ident(vec_col))))
+    )
 
 
 def assign_clusters(
@@ -96,40 +79,19 @@ def assign_clusters(
     vec_col: str,
     centers: list[list[float]],
     out_col: str = "cluster",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Nearest-center (squared L2) assignment; ties -> lowest center id
     (matching the reference's strict-< argmin scan in id order,
-    KMeansMapFunction.cc:188-214).
+    KMeansMapFunction.cc:188-214).  ``vec_col`` names a top-level
+    column, taken literally (see functions.vectors.sql_ident).
 
-    strategy: 'literal' folds centers into the plan (JVM-side, exact
-    left-fold arithmetic — the oracle-parity path), 'numpy' uses an
-    Arrow-batched matmul (the large-k path: a 65k-cell IVF codebook
-    cannot be a Catalyst literal), 'auto' picks by k*dim.
-
-    The literal form is array_min over (dist, cid) structs computed by
-    ONE transform lambda: struct ordering is lexicographic, so the min
-    is the smallest distance with the lowest cid on ties, and the fold
-    is compiled once regardless of k.
+    Up to ``_LITERAL_BUDGET`` center*dim values the centers fold into
+    the plan (JVM-side, exact left-fold arithmetic — the oracle-parity
+    path); beyond it an Arrow-batched matmul assigns (the large-k path:
+    a 65k-cell IVF codebook cannot be a Catalyst literal).
     """
-    if strategy == "auto":
-        strategy = (
-            "literal"
-            if len(centers) * len(centers[0]) <= _LITERAL_BUDGET
-            else "numpy"
-        )
-    if strategy == "numpy":
+    if len(centers) * len(centers[0]) > _LITERAL_BUDGET:
         return _assign_numpy(df, vec_col, centers, out_col)
-    # ONE transform lambda over a nested centers literal: the distance
-    # fold is compiled once and looped over centers at eval time,
-    # instead of k unrolled copies of the fold in the expression tree —
-    # same arithmetic (sequential left fold per center, so bit-identical
-    # to the per-center form), much cheaper analysis/codegen for large k.
-    # Built as ONE F.expr string (r12, guide §4): the per-element
-    # F.lit/lambda construction cost k*dim py4j round trips — ~0.6 s of
-    # driver-side client time per call at k=8, dim=64, dominating every
-    # Lloyd iteration — while the parsed expression tree (and therefore
-    # the plan, the fold arithmetic, and the tie rule) is identical.
     return df.withColumn(out_col, F.expr(_assign_sql(vec_col, centers)))
 
 
@@ -161,24 +123,18 @@ def lloyd(
     """
     dim = len(initial_centers[0])
     centers = [list(map(float, c)) for c in initial_centers]
-    vecs = df.select(vec_col)
+    vecs = df.select(F.col(sql_ident(vec_col)))
     cached = persist_input and iterations > 0
     if cached:
         from pyspark import StorageLevel
 
         vecs = vecs.persist(StorageLevel.MEMORY_AND_DISK)
-    # Per-dimension means as ONE expr string (r12, guide §4): the
-    # 64-call `F.avg(v[i])` construction cost ~0.5 s/iteration of py4j
-    # client time; `array(avg(v[0]), ..)` is the same 64 independent
-    # avg aggregates (identical partial/final arithmetic), only
-    # projected into an array after aggregation.
+    # Per-dimension means as ONE expr string: `array(avg(v[0]), ..)` is
+    # the same `dim` independent avg aggregates (identical partial/final
+    # arithmetic), only projected into an array after aggregation.
+    v = f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
     means_sql = (
-        "array("
-        + ",".join(
-            f"avg(CAST(`{vec_col}` AS ARRAY<DOUBLE>)[{i}])"
-            for i in range(dim)
-        )
-        + ") AS __ms"
+        "array(" + ",".join(f"avg({v}[{i}])" for i in range(dim)) + ") AS __ms"
     )
     try:
         for _ in range(iterations):

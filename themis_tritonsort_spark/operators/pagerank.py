@@ -43,6 +43,10 @@ def pagerank(
     Initial vertex set = distinct sources (they own structural tuples);
     destinations without structure get created by the dangling rule on
     the first iteration, after which the vertex set is stable.
+
+    Constructing the result runs its job (an eager final
+    ``localCheckpoint``), so the persisted edge side is released
+    before returning — nothing stays cached in the session.
     """
     spark = edges.sparkSession
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
@@ -68,40 +72,47 @@ def pagerank(
         F.col("deg"),
     )
 
-    for _ in range(iterations):
-        # ONE shuffle per iteration: contributions (edge scatter +
-        # dangling self-send) and the vertex skeleton (vid, deg) are
-        # tagged into one union and merged by a single groupBy — the
-        # exact shape of the reference reduce, which sees rank tuples
-        # and the structural tuple in one key-group
-        # (PageRankReduceFunction.cc:245-286).  The former
-        # full-outer-join formulation shuffled twice per round.
-        scatter = (
-            ranks.where(F.col("deg") > 0)
-            .join(e, ranks.vid == e.src)
-            .select(
-                F.col("dst").alias("vid"),
-                (F.col("rank") / F.col("deg")).alias("c"),
-                F.lit(None).cast("long").alias("d"),
+    try:
+        for _ in range(iterations):
+            # ONE shuffle per iteration: contributions (edge scatter +
+            # dangling self-send) and the vertex skeleton (vid, deg) are
+            # tagged into one union and merged by a single groupBy — the
+            # exact shape of the reference reduce, which sees rank tuples
+            # and the structural tuple in one key-group
+            # (PageRankReduceFunction.cc:245-286).  The former
+            # full-outer-join formulation shuffled twice per round.
+            scatter = (
+                ranks.where(F.col("deg") > 0)
+                .join(e, ranks.vid == e.src)
+                .select(
+                    F.col("dst").alias("vid"),
+                    (F.col("rank") / F.col("deg")).alias("c"),
+                    F.lit(None).cast("long").alias("d"),
+                )
             )
-        )
-        self_keep = ranks.where(F.col("deg") == 0).select(
-            "vid", F.col("rank").alias("c"), F.lit(None).cast("long").alias("d")
-        )
-        skeleton = ranks.select(
-            "vid", F.lit(None).cast("double").alias("c"), F.col("deg").alias("d")
-        )
-        merged = scatter.unionByName(self_keep).unionByName(skeleton)
-        # Contribution-only vertices are CREATED with no out-edges
-        # (dangling rule, PageRankReduceFunction.cc:42-53): their max(d)
-        # is null -> deg 0.  Structure-only vertices sum no c -> rank 0.
-        ranks = merged.groupBy("vid").agg(
-            F.coalesce(F.sum("c"), F.lit(0.0)).alias("rank"),
-            F.coalesce(F.max("d"), F.lit(0)).cast("long").alias("deg"),
-        )
-        # Break the ever-growing lineage each round (each ranks refers
-        # to the previous one three times — unchecked, the plan tree
-        # grows 3^iterations).
-        ranks = ranks.localCheckpoint(eager=False)
-
-    return ranks.select("vid", "rank")
+            self_keep = ranks.where(F.col("deg") == 0).select(
+                "vid", F.col("rank").alias("c"), F.lit(None).cast("long").alias("d")
+            )
+            skeleton = ranks.select(
+                "vid", F.lit(None).cast("double").alias("c"), F.col("deg").alias("d")
+            )
+            merged = scatter.unionByName(self_keep).unionByName(skeleton)
+            # Contribution-only vertices are CREATED with no out-edges
+            # (dangling rule, PageRankReduceFunction.cc:42-53): their max(d)
+            # is null -> deg 0.  Structure-only vertices sum no c -> rank 0.
+            ranks = merged.groupBy("vid").agg(
+                F.coalesce(F.sum("c"), F.lit(0.0)).alias("rank"),
+                F.coalesce(F.max("d"), F.lit(0)).cast("long").alias("deg"),
+            )
+            # Break the ever-growing lineage each round (each ranks refers
+            # to the previous one three times — unchecked, the plan tree
+            # grows 3^iterations).
+            ranks = ranks.localCheckpoint(eager=False)
+        # The FINAL checkpoint is eager so the result reads vertex-sized
+        # blocks and the edge persist is released HERE instead of
+        # leaking into the session (label_propagation's discipline):
+        # the caller's action would have done this work anyway.
+        out = ranks.select("vid", "rank").localCheckpoint(eager=True)
+    finally:
+        e.unpersist()
+    return out

@@ -22,8 +22,40 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import as_double, icos_ppm, idot, micro_quantize
-from .kmeans import assign_clusters
+from ..functions.vectors import (
+    as_double,
+    centers_sql,
+    icos_ppm,
+    idot,
+    l2_sq_sql,
+    micro_quantize,
+    sq8_quantize,
+    sql_array,
+    sql_ident,
+)
+from .kmeans import assign_clusters, lloyd
+
+
+def _topk_per_query(
+    scored: DataFrame, score: str, k: int, score_as: str | None = None
+) -> DataFrame:
+    """The shared tail of every *_topk operator: rank a scored
+    (query_id, neighbor_id, ``score``) relation per query — descending
+    score, ties by ascending neighbor id, so the order is total — and
+    keep ranks 1..k as (query_id, neighbor_id, rank[, ``score_as``]).
+    The per-query heap is a row_number window, which AQE executes
+    partially per partition."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    cols = ["query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")]
+    if score_as is not None:
+        cols.append(F.col(score).alias(score_as))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(*cols)
+    )
 
 
 def brute_force_topk(
@@ -51,12 +83,8 @@ def brute_force_topk(
     bit-reproducible by any SQL engine.  Zero-norm vectors (no
     direction) are excluded from both sides.
     """
-    from ..functions.vectors import icos_ppm
-
     qid = query_id_col or id_col
-    q = _micro_sided(queries, qid, vec_col, "query_id").withColumnsRenamed(
-        {"__q": "__qq", "__n": "__qn"}
-    )
+    q = _query_sided(queries, qid, vec_col)
     joined = _micro_sided(corpus, id_col, vec_col, "neighbor_id").crossJoin(
         F.broadcast(q)
     )
@@ -65,14 +93,7 @@ def brute_force_topk(
         "__cos",
         icos_ppm(F.col("__q"), F.col("__n"), F.col("__qq"), F.col("__qn")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk_per_query(scored, "__cos", k)
 
 
 def hard_negative_topk(
@@ -104,26 +125,10 @@ def hard_negative_topk(
     brute_force_topk) — both the emitted value and the rank it orders
     are bit-reproducible across engines.  Zero-norm vectors are
     excluded from both sides."""
-    from ..functions.vectors import icos_ppm, idot, micro_quantize
-
     qid = query_id_col or id_col
-    q = (
-        queries.select(
-            F.col(qid).alias("query_id"),
-            micro_quantize(F.col(vec_col)).alias("__qq"),
-            F.col(label_col).alias("__qlab"),
-        )
-        .withColumn("__qn", idot(F.col("__qq"), F.col("__qq")))
-        .where(F.col("__qn") > 0)
-    )
+    q = _query_sided(queries, qid, vec_col, {label_col: "__qlab"})
     joined = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            micro_quantize(F.col(vec_col)).alias("__q"),
-            F.col(label_col).alias("__clab"),
-        )
-        .withColumn("__n", idot(F.col("__q"), F.col("__q")))
-        .where(F.col("__n") > 0)
+        _micro_sided(corpus, id_col, vec_col, "neighbor_id", {label_col: "__clab"})
         .crossJoin(F.broadcast(q))
         .where(F.col("__clab") != F.col("__qlab"))
     )
@@ -131,19 +136,7 @@ def hard_negative_topk(
         "__cos",
         icos_ppm(F.col("__q"), F.col("__n"), F.col("__qq"), F.col("__qn")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.col("__cos").alias("cos_ppm"),
-        )
-    )
+    return _topk_per_query(scored, "__cos", k, score_as="cos_ppm")
 
 
 def kcenter_select(
@@ -172,14 +165,13 @@ def kcenter_select(
     engines (ties broken by ascending id), making the whole greedy
     trajectory oracle-checkable.
 
-    Each step's distance expression is ONE F.expr string (r12, guide
-    §4): the per-element ``F.lit`` center array cost dim py4j round
-    trips per step of driver-side client time; the parsed fold is the
-    identical l2_sq (zip_with + sequential aggregate) * 1e6 rounding."""
-    from .kmeans import sql_double
-
+    Each step's distance is ONE F.expr string built by
+    functions.vectors.l2_sq_sql — the same squared-L2 fold as k-means
+    assignment — rounded to micros.  ``vec_col`` names a top-level
+    column, taken literally."""
     base = df.select(
-        F.col(id_col).alias("__id"), as_double(F.col(vec_col)).alias("__v")
+        F.col(id_col).alias("__id"),
+        as_double(F.col(sql_ident(vec_col))).alias("__v"),
     ).where(F.col("__v").isNotNull())
     base = base.persist()
     seed = base.orderBy("__id").limit(1).collect()
@@ -193,11 +185,9 @@ def kcenter_select(
 
     cur = base.withColumn("__md", F.lit(None).cast("long"))
     for step in range(2, k + 1):
-        c_sql = "array(" + ",".join(sql_double(x) for x in center) + ")"
         d_new = F.expr(
-            f"CAST(round(aggregate(zip_with(CAST(`__v` AS ARRAY<DOUBLE>), "
-            f"{c_sql}, (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), "
-            f"(acc, x) -> acc + x) * 1000000.0D, 0) AS BIGINT)"
+            f"CAST(round({l2_sq_sql('__v', sql_array(center))} "
+            f"* 1000000.0D, 0) AS BIGINT)"
         )
         cur = cur.withColumn("__md", F.least(F.coalesce("__md", d_new), d_new))
         cur = cur.where(~F.col("__id").isin([c[1] for c in chosen[-1:]]))
@@ -238,8 +228,6 @@ def sq8_topk(
     integer dot products tie more often than exact cosines, and the
     tiebreak keeps the result deterministic across engines.
     """
-    from ..functions.vectors import idot, sq8_quantize
-
     qid = query_id_col or id_col
     q = queries.select(
         F.col(qid).alias("query_id"), sq8_quantize(F.col(vec_col)).alias("__qq")
@@ -258,14 +246,7 @@ def sq8_topk(
         idot(F.col("__cq"), F.col("__qq")).cast("double")
         / (F.sqrt(F.col("__cn").cast("double")) * F.sqrt(F.col("__qn").cast("double"))),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk_per_query(scored, "__cos", k)
 
 
 def _probed_cells(
@@ -278,20 +259,12 @@ def _probed_cells(
     """(query_id, __qvec, cell): each query's ``nprobe`` nearest cells
     by the same literal-fold distance and (distance, cell-id) tie order
     as assign_clusters — so the probe set is bit-consistent with the
-    corpus's cell assignment.
-
-    The per-centroid struct array is ONE F.expr string (r12, guide §4):
-    the per-center ``_dist_sq`` construction cost k*dim py4j round
-    trips of driver-side client time; the parsed transform builds the
-    identical (d, cell) structs (same fold, same int cell ids)."""
-    from .kmeans import centers_sql
-
+    corpus's cell assignment (the per-centroid struct array is ONE
+    F.expr string over functions.vectors.l2_sq_sql)."""
     q = queries.select(F.col(qid).alias("query_id"), F.col(vec_col).alias("__qvec"))
     cells_sql = (
         f"transform({centers_sql(centroids)}, (c, i) -> "
-        f"struct(aggregate(zip_with(CAST(`__qvec` AS ARRAY<DOUBLE>), c, "
-        f"(x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), "
-        f"(acc, x) -> acc + x) AS d, i AS cell))"
+        f"struct({l2_sq_sql('__qvec', 'c')} AS d, i AS cell))"
     )
     dists = q.select(
         "query_id",
@@ -334,8 +307,6 @@ def ivf_topk(
     centroid distances is far from rounding boundaries — unlike a
     ppm-rounded rank).  Zero-norm corpus vectors are excluded.
     """
-    from ..functions.vectors import icos_ppm, idot, micro_quantize
-
     qid = query_id_col or id_col
     if cell_col is None:
         assigned = assign_clusters(corpus, vec_col, centroids, out_col="cell")
@@ -343,22 +314,14 @@ def ivf_topk(
     else:
         assigned = corpus
         cell_src = cell_col
-    cells = (
-        assigned.select(
-            F.col(id_col).alias("neighbor_id"),
-            micro_quantize(F.col(vec_col)).alias("__q"),
-            F.col(cell_src).alias("cell"),
-        )
-        .withColumn("__n", idot(F.col("__q"), F.col("__q")))
-        .where(F.col("__n") > 0)
+    cells = _micro_sided(
+        assigned, id_col, vec_col, "neighbor_id", {cell_src: "cell"}
     )
-
-    probed = _probed_cells(queries, qid, vec_col, centroids, nprobe).select(
+    probed = _query_sided(
+        _probed_cells(queries, qid, vec_col, centroids, nprobe),
         "query_id",
-        "cell",
-        micro_quantize(F.col("__qvec")).alias("__qq"),
-    ).withColumn("__qn", idot(F.col("__qq"), F.col("__qq"))).where(
-        F.col("__qn") > 0
+        "__qvec",
+        {"cell": "cell"},
     )
 
     joined = cells.join(F.broadcast(probed), "cell").where(
@@ -368,14 +331,7 @@ def ivf_topk(
         "__cos",
         icos_ppm(F.col("__q"), F.col("__n"), F.col("__qq"), F.col("__qn")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk_per_query(scored, "__cos", k)
 
 
 def cosine_neardup_pairs(
@@ -414,8 +370,6 @@ def cosine_neardup_pairs(
     {x, y} lands in the single group (min_blk, max_blk), and
     same-block pairs take the index upper triangle.
     """
-    from ..functions.vectors import icos_ppm
-
     quant = _micro_sided(df, id_col, vec_col, "__id")
     b = int(n_blocks)
     # Row with block k joins every pair (p, q), p <= q, with p==k or
@@ -538,8 +492,6 @@ def semdedup(
     Nearest-center assignment reuses operators/kmeans.py
     assign_clusters (strict-< argmin in center order,
     KMeansMapFunction.cc:188-214)."""
-    from pyspark import StorageLevel
-
     assigned = assign_clusters(
         df.select(F.col(id_col), F.col(vec_col)), vec_col, centers
     )
@@ -637,7 +589,6 @@ def hyperplane_lsh_neardup(
     n_planes: int = 16,
     bands: int = 4,
     seed: int = 13,
-    verify: str = "numpy",
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Approximate near-duplicate pairs via sign-random-projection LSH.
@@ -666,21 +617,16 @@ def hyperplane_lsh_neardup(
     Scale shape: the band join carries ONLY (id, band, bucket) rows —
     vectors never enter the shuffle; candidates are deduped as bare id
     pairs and the vectors are fetched back by two hash joins for the
-    exact verify.  Signature and verify are Arrow-vectorized numpy
-    (one (batch x dim) @ (dim x n_planes) matmul per batch) — the
+    exact verify.  The signature is Arrow-vectorized numpy (one
+    (batch x dim) @ (dim x n_planes) matmul per batch) — the
     n_planes-fold Catalyst expression this replaces evaluated
     higher-order functions per element and was ~10x slower; this is the
     sanctioned Pandas-UDF exception for genuinely numeric kernels.
 
-    ``verify`` selects the exact-cosine arithmetic for the candidate
-    verification step: "numpy" (default) uses an Arrow-batched INTEGER
-    einsum kernel — the throughput path; "fold" uses the JVM
-    integer fold (functions.vectors.icos_ppm).  Both paths compute
-    the identical micro-quantized integer cosine — exact int64 dots,
-    then the same single IEEE sqrt/div/floor — so their cos_ppm is
-    BIT-IDENTICAL to each other AND to cosine_neardup_pairs (float
-    summation order, the one thing that used to distinguish them, no
-    longer exists anywhere in the arithmetic).
+    The candidate verification is the JVM integer fold
+    (functions.vectors.icos_ppm) over micro-quantized vectors — exact
+    int64 dots, then one IEEE sqrt/div/floor — so cos_ppm is
+    BIT-IDENTICAL to cosine_neardup_pairs.
 
     ``max_bucket`` is the hot-bucket skew guard (same failure mode and
     same fix as the MinHash path, operators/dedup.py
@@ -691,8 +637,6 @@ def hyperplane_lsh_neardup(
     join's own (band, bucket) partitioning (no extra shuffle); the
     degenerate cluster belongs to exact dedup, which is linear.
     """
-    if verify not in ("numpy", "fold"):
-        raise ValueError(f"verify must be 'numpy' or 'fold', got {verify!r}")
     if n_planes % bands != 0:
         raise ValueError(
             f"n_planes ({n_planes}) must be divisible by bands ({bands})"
@@ -707,22 +651,6 @@ def hyperplane_lsh_neardup(
         bits = (m @ planes_m >= 0).astype(np.int64)  # batch x n_planes
         packed = bits.reshape(len(m), bands, rows_per_band) @ weights
         return pd.Series(list(packed))
-
-    @F.pandas_udf("long")
-    def icos_batch(
-        qa: pd.Series, na: pd.Series, qb: pd.Series, nb: pd.Series
-    ) -> pd.Series:
-        # integer einsum over the quantized vectors: exact int64 dots
-        # (per-term <= ~4e11, dim-bounded sums far from overflow), then
-        # the same single IEEE sqrt/mul/div/floor as icos_ppm — the
-        # numpy result is bit-identical to the JVM fold's
-        ma = np.asarray(qa.tolist(), dtype=np.int64)
-        mb = np.asarray(qb.tolist(), dtype=np.int64)
-        d = np.einsum("ij,ij->i", ma, mb).astype(np.float64)
-        den = np.sqrt(na.to_numpy().astype(np.float64)) * np.sqrt(
-            nb.to_numpy().astype(np.float64)
-        )
-        return pd.Series(np.floor(1e6 * d / den + 0.5).astype(np.int64))
 
     sided = df.select(
         F.col(id_col).alias("__id"), as_double(F.col(vec_col)).alias("__v")
@@ -748,8 +676,6 @@ def hyperplane_lsh_neardup(
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    from ..functions.vectors import icos_ppm
-
     quant = _micro_sided(df, id_col, vec_col, "__id")
     va = quant.select(
         F.col("__id").alias("id_a"),
@@ -761,19 +687,17 @@ def hyperplane_lsh_neardup(
         F.col("__q").alias("__qb"),
         F.col("__n").alias("__nb"),
     )
-    fetched = cand.join(va, "id_a").join(vb, "id_b")
     ppm_threshold = int(round(float(threshold) * 1e6))
-    if verify == "fold":
-        scored = fetched.withColumn(
+    scored = (
+        cand.join(va, "id_a")
+        .join(vb, "id_b")
+        .withColumn(
             "cos_ppm",
             icos_ppm(
                 F.col("__qa"), F.col("__na"), F.col("__qb"), F.col("__nb")
             ),
         )
-    else:
-        scored = fetched.withColumn(
-            "cos_ppm", icos_batch("__qa", "__na", "__qb", "__nb")
-        )
+    )
     return scored.where(F.col("cos_ppm") >= ppm_threshold).select(
         "id_a", "id_b", "cos_ppm"
     )
@@ -859,8 +783,6 @@ def build_ivf_topk(
     exists; at scale you train on a sample and reuse the codebook
     across queries (it is just a list of floats).
     """
-    from .kmeans import lloyd
-
     seeds = [
         [float(x) for x in r[vec_col]]
         for r in corpus.orderBy(id_col).limit(n_cells).collect()
@@ -906,18 +828,6 @@ def pq_codebook(
         [list(r["__v"][s * sub : (s + 1) * sub]) for r in rows]
         for s in range(m)
     ]
-
-
-def _pq_sub_l2(subv: Column, w: list[float]) -> Column:
-    """Sequential-fold squared L2 between a sliced sub-vector column
-    and a python codeword (same arithmetic order as assign_clusters'
-    literal-path distance fold)."""
-    code = F.array(*[F.lit(float(x)) for x in w])
-    return F.aggregate(
-        F.zip_with(subv, code, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def pq_encode(
@@ -1066,14 +976,7 @@ def pq_topk(
         ).alias("__q"),
     ).select("neighbor_id", "__q.query_id", "__q.__score")
     scored = scored.where(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk_per_query(scored, "__score", k)
 
 
 def pq_codebook_refined(
@@ -1096,10 +999,6 @@ def pq_codebook_refined(
     of re-deriving the corpus from source each time); every inner job
     is eager, so the cache is unpersisted before returning — no
     caller-owned contract."""
-    from pyspark import StorageLevel
-
-    from .kmeans import lloyd
-
     seeded = pq_codebook(df, id_col, vec_col, m, k)
     sub = len(seeded[0][0])
     refined = []
@@ -1151,9 +1050,12 @@ def pq_rerank_topk(
     result call ``spark.catalog.clearCache()`` (or track and
     ``unpersist()`` your own handles) or repeated persist-mode calls
     accumulate cached relations.  The default ``localCheckpoint``
-    mode has no such contract (its blocks are owned by the lineage
-    and GC'd with the DataFrame).  bench.py clears the cache between
-    passes; library callers own this themselves (ADVICE r08)."""
+    mode has no caller-owned cache, but its blocks (the shortlist's
+    and the survivors') are NOT released by ``clearCache()`` either:
+    they live until the result DataFrame is garbage-collected in
+    Python and the JVM ContextCleaner frees the checkpointed RDDs.
+    bench.py clears the cache between passes; library callers own
+    this themselves (ADVICE r08)."""
     qid = query_id_col or id_col
     # Materialized once (r12, guide §5): the shortlist feeds TWO
     # broadcasts below (its distinct neighbor ids against the corpus,
@@ -1215,9 +1117,7 @@ def pq_rerank_topk(
             f"barrier must be 'localCheckpoint' or 'persist', got {barrier!r}"
         )
     vecs = _micro_sided(surv, "neighbor_id", "__v", "neighbor_id")
-    qv = _micro_sided(queries, qid, vec_col, "query_id").select(
-        "query_id", F.col("__q").alias("__qq"), F.col("__n").alias("__qn")
-    )
+    qv = _query_sided(queries, qid, vec_col)
     cand = vecs.join(F.broadcast(short), "neighbor_id").join(
         F.broadcast(qv), "query_id"
     )
@@ -1225,32 +1125,43 @@ def pq_rerank_topk(
         "__cos",
         icos_ppm(F.col("__q"), F.col("__n"), F.col("__qq"), F.col("__qn")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk_per_query(scored, "__cos", k)
 
 
 def _micro_sided(
-    df: DataFrame, id_col: str, vec_col: str, out_id: str
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    out_id: str,
+    carry: dict[str, str] | None = None,
 ) -> DataFrame:
-    """(out_id, __q, __n): micro-quantized vector + integer self-dot,
-    zero-norm rows dropped (a zero vector has no direction; dividing
-    by its norm is NULL in Spark but engine-dependent elsewhere —
-    excluding it map-side keeps every downstream value engine-exact)."""
-    from ..functions.vectors import idot, micro_quantize
-
+    """(out_id, __q, *carry, __n): micro-quantized vector + integer
+    self-dot, zero-norm rows dropped (a zero vector has no direction;
+    dividing by its norm is NULL in Spark but engine-dependent
+    elsewhere — excluding it map-side keeps every downstream value
+    engine-exact).  ``carry`` maps pass-through columns to their
+    output names (a label or a cell id the join needs)."""
     return (
         df.select(
             F.col(id_col).alias(out_id),
             micro_quantize(F.col(vec_col)).alias("__q"),
+            *[F.col(c).alias(a) for c, a in (carry or {}).items()],
         )
         .withColumn("__n", idot(F.col("__q"), F.col("__q")))
         .where(F.col("__n") > 0)
+    )
+
+
+def _query_sided(
+    queries: DataFrame,
+    qid: str,
+    vec_col: str,
+    carry: dict[str, str] | None = None,
+) -> DataFrame:
+    """The broadcast query side of a top-k join: ``_micro_sided`` as
+    (query_id, __qq, *carry, __qn), named apart from the corpus side."""
+    return _micro_sided(queries, qid, vec_col, "query_id", carry).withColumnsRenamed(
+        {"__q": "__qq", "__n": "__qn"}
     )
 
 
@@ -1279,7 +1190,6 @@ def margin_select(
     hash join (never broadcast: at corpus scale it cannot fit)."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    from pyspark import StorageLevel
 
     # positive candidates only: margin is meaningless across
     # anti-correlated pairs, and keeping every integer strictly
@@ -1518,8 +1428,6 @@ def margin_pair_mine_ann(
     e.g. 64/8 so random pairs collide at 2^-8 per band and the
     candidate set stays ~linear in the corpus.
     """
-    from ..functions.vectors import icos_ppm
-
     qid = query_id_col or id_col
     planes_micro = micro_planes(dim, n_planes, seed)
     qsided = _micro_sided(queries, qid, vec_col, "query_id")

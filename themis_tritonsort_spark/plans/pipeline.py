@@ -223,7 +223,8 @@ def recover_lost_ranges(
 ) -> str:
     """Recompute ONLY the lost key ranges of a ranged stage and patch
     them into the existing checkpoint, leaving surviving ranges'
-    files untouched (dynamic partition overwrite replaces exactly the
+    files untouched (dynamic partition overwrite — a writer option, so
+    the session conf is never touched — replaces exactly the
     ``__range`` directories the recovery writes).  The range predicate
     is applied to the recomputed output AND pushes down through
     map-like stage logic to the input scan — the recovery job reads
@@ -238,11 +239,10 @@ def recover_lost_ranges(
         .withColumn("__range", _range_bucket(key_col, boundaries))
     )
     path = os.path.join(root, stage.name)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("__range").parquet(path)
-    finally:
-        spark.conf.set(mode_key, old)
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__range")
+        .parquet(path)
+    )
     return path

@@ -1492,14 +1492,13 @@ def q39_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     return hyperplane_lsh_neardup(
         emb, "vec_id", "embedding", threshold=NEARDUP_COS, dim=64,
-        n_planes=16, bands=8, verify="fold",
+        n_planes=16, bands=8,
     )
 
 
 # Q39 oracle: the exact near-dup pair set (same SQL as q38).  Sign-LSH
 # candidates are verified with the SAME engine-exact integer cosine as
-# q38 (micro-quantized icos_ppm; verify="fold" selects the JVM fold,
-# which is bit-identical to the Arrow integer kernel), so the output
+# q38 (micro-quantized icos_ppm, the same JVM integer fold), so the output
 # is a subset of the exact pairs with identical cos_ppm values; the
 # configured signature (16 planes, 8 bands of 2 bits) recovers every
 # >=400000-ppm pair of this corpus (hyperplanes are seeded, so recall

@@ -8,7 +8,9 @@ set once here so every operator inherits them.
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -59,3 +61,24 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set session conf ``key`` to ``value`` for the ``with`` block only.
+
+    On exit the previous value is restored, or the key is UNSET if the
+    session never set it — re-setting the default instead would leave
+    an explicit entry in ``spark.conf.getAll`` that outlives the call
+    and pins the value against later default changes."""
+    conf = spark.conf
+    had = key in conf.getAll
+    prev = conf.get(key) if had else None
+    conf.set(key, value)
+    try:
+        yield
+    finally:
+        if had:
+            conf.set(key, prev)
+        else:
+            conf.unset(key)

@@ -17,9 +17,13 @@ import uuid
 from collections.abc import Iterator
 
 import pandas as pd
+from py4j.protocol import Py4JJavaError
 
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import scoped_conf
 
 
 def token_budget_stream(
@@ -185,15 +189,14 @@ def token_budget_replay(
             os.path.getsize(os.path.join(src, f)) for f in parts
         )
         advisory = _parse_bytes(
+            spark,
             spark.conf.get(
                 "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"
-            )
+            ),
         )
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
         n_state = max(1, min(cap, -(-staged_bytes // advisory)))
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
-        try:
+        with scoped_conf(spark, "spark.sql.shuffle.partitions", str(n_state)):
             stream = (
                 spark.readStream.schema("group string, id long, n long")
                 .option("maxFilesPerTrigger", 1)
@@ -211,21 +214,23 @@ def token_budget_replay(
             )
             q.awaitTermination(300)
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return spark.table(name)
 
 
-def _parse_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf value ('64m', '256MB', '67108864b',
-    plain digits = bytes)."""
-    s = str(v).strip().lower().removesuffix("b")
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    return int(s) * mult
+def _parse_bytes(spark: SparkSession, v: str) -> int:
+    """A Spark byte-size conf value in bytes, parsed by Spark's own
+    parser (``JavaUtils.byteStringAsBytes``: '64m', '256MB', '1t',
+    plain digits = bytes).  Anything it rejects ('0.5g') or a
+    non-positive size falls back to the 64 MiB default rather than
+    failing the replay."""
+    try:
+        n = int(
+            spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+            .byteStringAsBytes(str(v))
+        )
+    except (CapturedException, Py4JJavaError):
+        # the JVM's rejection, converted by PySpark or raw
+        return 64 << 20
+    return n if n > 0 else 64 << 20
